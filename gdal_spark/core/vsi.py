@@ -13,12 +13,22 @@ header parsers need (int / slice indexing, struct unpack, forward
 find) WITHOUT ever materializing the file.  A multi-GB HDF5/HFA file
 opens with only its superblock / node-tree / B-tree pages resident —
 the same access pattern geotiff.read_ifd uses for TIFF IFDs.
+
+`scratch()` is the seam's side for throwaway files: every file the
+package writes for itself (round-trip fixtures, extracted /vsizip/
+members, GeoJP2 staging TIFFs) gets a fresh path under ONE per-process
+root, removed at exit.
 """
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
 import struct
+import tempfile
+import threading
 from collections import OrderedDict
 
 # -- backend registry --------------------------------------------------------
@@ -230,3 +240,37 @@ class SeekReader:
 
 def open_seekable(path: str) -> SeekReader:
     return SeekReader(path)
+
+
+# -- per-process scratch space -----------------------------------------------
+
+_scratch_root: tuple[int, str] | None = None     # (owner pid, root dir)
+_scratch_seq = itertools.count()
+_scratch_lock = threading.Lock()
+
+
+def scratch(suffix: str = "") -> str:
+    """A fresh path (nothing exists there yet) ending in `suffix`, under
+    this process's scratch root. The root is made on first use with
+    tempfile.mkdtemp and removed by `remove_scratch` at interpreter exit,
+    so callers never pre-clean or delete what they write there."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None or _scratch_root[0] != os.getpid():
+            _scratch_root = (os.getpid(),
+                             tempfile.mkdtemp(prefix="gdal_spark_"))
+        root = _scratch_root[1]
+    return os.path.join(root, f"{next(_scratch_seq)}{suffix}")
+
+
+def remove_scratch() -> None:
+    """Delete the scratch root this process made (a forked child never
+    deletes its parent's); the next `scratch()` call starts a new one."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is not None and _scratch_root[0] == os.getpid():
+            shutil.rmtree(_scratch_root[1], ignore_errors=True)
+        _scratch_root = None
+
+
+atexit.register(remove_scratch)

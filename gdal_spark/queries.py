@@ -8,6 +8,11 @@ floating aggregate goes through the same deterministic arithmetic
 (decimal-exact sums, fixed association, explicit ROUND).
 
 Naming: q_* functions take (spark, sf_dir) and return a DataFrame.
+
+Fixtures: the round-trip queries write their files while the plan is
+built (the readers plan from the file). Every such file lives only under
+the per-process scratch root from `core.vsi.scratch()`, one fresh path
+per call, and the root is removed when the process exits.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import datagen
-from .core import tilemath
+from .core import tilemath, vsi
 from .functions import st
 from .operators import graphops, simsearch, spatial_join, textops
 
@@ -2146,6 +2151,9 @@ vals AS (SELECT CAST(COALESCE(c.v, 0) AS DOUBLE) AS v
          FROM g LEFT JOIN c ON c.x = g.x AND c.y = g.y)
 """
 
+_DENSITY_XY_SQL = _DENSITY_VALS_SQL.replace("vals AS (SELECT",
+                                            "vals AS (SELECT g.x, g.y,")
+
 
 @_reg("raster_stats", _DENSITY_VALS_SQL + """
 SELECT CAST(1 AS INTEGER) AS band, CAST(count(*) AS BIGINT) AS n_valid,
@@ -2203,9 +2211,7 @@ def q_line_dedup(spark, sf_dir):
     return textops.line_dedup(_t(spark, sf_dir, "documents"), min_count=2)
 
 
-@_reg("band_calc", _DENSITY_VALS_SQL.replace("vals AS (SELECT",
-                                             """vals AS (SELECT g.x, g.y,""")
-      + """
+@_reg("band_calc", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        ROUND(sqrt(v) + 2.0 * v, 6) AS val_r
 FROM vals WHERE v > 0
@@ -2393,10 +2399,6 @@ def q_warp_near_mercator(spark, sf_dir):
 #  footprint, mosaic, rtranslate, sub-pixel contour bands)
 # =============================================================================
 
-_DENSITY_XY_SQL = _DENSITY_VALS_SQL.replace("vals AS (SELECT",
-                                            "vals AS (SELECT g.x, g.y,")
-
-
 def _pxy_udfs():
     """(px, py) pandas UDFs extracting point coordinates from WKB via the
     vectorized `wkb.points_batch` lane (one concat + one frombuffer per
@@ -2451,6 +2453,36 @@ def _px_rows(tiles_df, tile=8, dtype="float64", name="val_r",
                 pd.DataFrame(columns=["x", "y", name])
 
     return tiles_df.mapInPandas(to_rows, schema)
+
+
+def _xyv(tiles_df, name="v"):
+    """8-px tile table -> (x, y, <name>) rows through gdal2xyz: the
+    read-back side of the raster round trips."""
+    from .raster.tiles import gdal2xyz
+    return gdal2xyz(tiles_df, tile=8).select(
+        F.col("x").cast("long").alias("x"),
+        F.col("y").cast("long").alias("y"),
+        F.col("value").alias(name))
+
+
+def _map_px(tiles_df, fn):
+    """Per-tile numpy map over an 8-px tile table: every tile's pixels
+    become fn(pixels); the dtype tag ("f8", "u1", ...) is taken from the
+    array fn returns."""
+    import pandas as pd
+    from .raster.tiles import decode_px, encode_px
+
+    def run(batches):
+        for pdf in batches:
+            out = []
+            for r in pdf.itertuples(index=False):
+                arr = fn(decode_px(r.px, r.dtype, 8))
+                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
+                            f"{arr.dtype.kind}{arr.dtype.itemsize}",
+                            r.nodata, encode_px(arr)))
+            yield pd.DataFrame(out, columns=list(pdf.columns))
+
+    return tiles_df.mapInPandas(run, tiles_df.schema)
 
 
 _HORN_NB_SQL = """
@@ -3011,8 +3043,6 @@ def q_shp_roundtrip(spark, sf_dir):
     collect of features) and read back through the byte-range
     distributed parser; the oracle recomputes the same (doc_id, lon,
     lat) set from the table."""
-    import tempfile
-    import os
     import numpy as np
     import pandas as pd
     from .core import wkb as _wkb
@@ -3025,8 +3055,7 @@ def q_shp_roundtrip(spark, sf_dir):
 
     layer = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
         .select(mk("lon", "lat").alias("geom"), F.col("doc_id"))
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_shp_{os.getpid()}")
+    base = vsi.scratch()
     write_shapefile_dist(layer, base)
     out = read_shapefile(spark, base, features_per_task=512)
 
@@ -3055,8 +3084,6 @@ def q_fgb_bbox_read(spark, sf_dir):
     DISTRIBUTED sink (write_fgb_dist — distributed Hilbert sort, per-task
     feature + leaf-node pwrite, healed 16-group upper levels) instead of
     a driver rows list."""
-    import tempfile
-    import os
     import numpy as np
     import pandas as pd
     from .core import wkb as _wkb
@@ -3069,8 +3096,7 @@ def q_fgb_bbox_read(spark, sf_dir):
 
     layer = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
         .select(mk("lon", "lat").alias("geom"), F.col("doc_id"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_fgb_{os.getpid()}.fgb")
+    path = vsi.scratch(".fgb")
     write_fgb_dist(layer, path)
     out = read_fgb(spark, path, bbox=(-50.0, -40.0, 60.0, 40.0),
                    features_per_task=512)
@@ -4300,8 +4326,6 @@ def q_gtiff_ingest(spark, sf_dir):
     (sources/geotiff.py) decodes it back into engine tiles, and every
     pixel must match the SQL-recomputed counts — replacing the
     driver-side raster_to_tiles fixture path with a real source."""
-    import os
-    import tempfile
     import numpy as np
     from .raster.tiles import decode_px
     from .sources.geotiff import read_gtiff, write_gtiff
@@ -4312,8 +4336,7 @@ def q_gtiff_ingest(spark, sf_dir):
         px = decode_px(r.px, r.dtype, 8)
         arr[r.tile_y * 8:(r.tile_y + 1) * 8,
             r.tile_x * 8:(r.tile_x + 1) * 8] = px
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_ingest_{os.getpid()}.tif")
+    path = vsi.scratch(".tif")
     write_gtiff(arr, path, tile=None, compression="deflate",
                 geotransform=(-180.0, 5.625, 0.0, 90.0, 0.0, -2.8125))
     tiles = read_gtiff(spark, path, tile=8)
@@ -4521,21 +4544,13 @@ def q_gpkg_roundtrip(spark, sf_dir):
     page writes into a .gpkg feature table and reads back through the
     rowid-range distributed reader; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import tempfile
-    import numpy as np
     from .core import wkb as _wkb
     from .sources.gpkg import read_gpkg, write_gpkg
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
         .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpkg_{os.getpid()}.gpkg")
-    if os.path.exists(path):
-        os.unlink(path)
-    rows = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                   [np.array([[r.lon, r.lat]])])),
-             {"doc_id": int(r.doc_id)}) for r in pts]
+    path = vsi.scratch(".gpkg")
+    rows = [(_wkb.point(r.lon, r.lat), {"doc_id": int(r.doc_id)}) for r in pts]
     write_gpkg(rows, path, table="pages", geometry_type="POINT")
     out = read_gpkg(spark, path, rows_per_task=64)
 
@@ -4559,20 +4574,11 @@ def q_ogrinfo_summary(spark, sf_dir):
     """ogrinfo -so twin (apps/ogrinfo_lib.cpp ReportOnLayer): feature
     count, promoted geometry type, extent and field list in one partial
     pass + combine; the oracle recomputes count/extent in SQL."""
-    import numpy as np
-    from .core import wkb as _wkb
     from .operators.info import layer_info
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 3 == 0)
 
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
+    layer = pts.select("doc_id", st.st_makepoint("lon", "lat").alias("geom"))
     out = layer_info(layer, name="pages")
     return out.select("layer", "feature_count", "n_null_geom", "geom_type",
                       F.round("minx", 9).alias("minx_r"),
@@ -4616,27 +4622,13 @@ def q_arrow_ipc_roundtrip(spark, sf_dir):
     part files (distributed pyarrow sink), read back through
     record-batch-range tasks planned from footers alone; the oracle
     recomputes the same (doc_id, lon, lat) set from the source table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.arrow_ipc import read_arrow_ipc, write_arrow_ipc
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
         .select("doc_id", "lon", "lat")
 
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_arrow_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    layer = pts.select("doc_id", st.st_makepoint("lon", "lat").alias("geom"))
+    path = vsi.scratch()
     write_arrow_ipc(layer, path)
     out, _meta = read_arrow_ipc(spark, path, batches_per_task=4)
 
@@ -4659,26 +4651,12 @@ def q_kml_roundtrip(spark, sf_dir):
     written as per-partition KML documents and read back through the
     namespace-agnostic distributed parser; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.kml import read_kml, write_kml
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 17 == 0)
 
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_kml_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    layer = pts.select("doc_id", st.st_makepoint("lon", "lat").alias("geom"))
+    path = vsi.scratch()
     write_kml(layer, path, name_col=None, props_col=None)
     out = read_kml(spark, path)
 
@@ -4702,26 +4680,12 @@ def q_gml_roundtrip(spark, sf_dir):
     as per-partition documents and read back through the
     namespace-agnostic distributed parser; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.gml import read_gml, write_gml
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
 
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gml_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    layer = pts.select("doc_id", st.st_makepoint("lon", "lat").alias("geom"))
+    path = vsi.scratch()
     write_gml(layer, path, props_col=None)
     out = read_gml(spark, path)
 
@@ -4751,9 +4715,6 @@ def q_geoparquet_bbox(spark, sf_dir):
     applies plain comparisons on the stored struct column — row-group
     stats prune, Catalyst pushes down. The oracle recomputes the rectangle
     intersection in SQL from the source table."""
-    import os
-    import shutil
-    import tempfile
     from .core import wkb as _wkb
     from .sources.geoparquet import read_geoparquet, write_geoparquet
 
@@ -4767,9 +4728,7 @@ def q_geoparquet_bbox(spark, sf_dir):
                           for x, y in zip(lon, lat)])
 
     layer = pts.select("doc_id", boxgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpq_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch()
     write_geoparquet(layer, path)
     out, _meta = read_geoparquet(spark, path,
                                  bbox=(-50.0, -40.0, 60.0, 40.0))
@@ -4791,15 +4750,10 @@ def q_zarr_roundtrip(spark, sf_dir):
     zlib-compressed chunked store (one task per chunk, driver writes only
     .zarray JSON) and read back through chunk-planned tasks; the oracle
     regenerates the pixel values in SQL."""
-    import os
-    import shutil
-    import tempfile
     from .sources.zarr import read_zarr, write_zarr
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_zarr_{os.getpid()}.zarr")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch(".zarr")
     write_zarr(t, path, width=64, height=64, tile=8)
     out, _meta = read_zarr(spark, path)
     return _px_rows(out, tile=8)
@@ -4856,7 +4810,6 @@ def q_vrt_mosaic(spark, sf_dir):
     wins the overlap (last-on-top), so the oracle is v left of x=24 and
     3v from there on."""
     import os
-    import tempfile
     import numpy as np
     from .raster.tiles import tiles_to_raster
     from .raster.vrt import build_vrt, read_vrt
@@ -4864,9 +4817,8 @@ def q_vrt_mosaic(spark, sf_dir):
 
     t = _density_tiles_full(spark, sf_dir)
     arr = tiles_to_raster(t, tile=8)[:64, :64]    # tiny fixture raster
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_vrt_{os.getpid()}")
-    os.makedirs(base, exist_ok=True)
+    base = vsi.scratch()
+    os.makedirs(base)
     pa, pb = os.path.join(base, "a.tif"), os.path.join(base, "b.tif")
     # A: x [0,40); B (wins the [24,40) overlap): x [24,64), tripled
     write_gtiff(np.ascontiguousarray(arr[:, :40]), pa,
@@ -5051,23 +5003,20 @@ def q_gtiff_tindex(spark, sf_dir):
     envelope plus ST_Area of the footprint polygon; the oracle is the
     closed form of the fixtures' geotransforms."""
     import os
-    import tempfile
 
     import numpy as np
 
     from .sources.geotiff import tile_index, write_gtiff
 
-    d = os.path.join(tempfile.gettempdir(),
-                     f"gdal_spark_tindex_{os.getpid()}")
-    os.makedirs(d, exist_ok=True)
+    d = vsi.scratch()
+    os.makedirs(d)
     paths = []
     for i in range(6):
         w, h = 16 + 4 * i, 12 + 2 * i
         gt = (10.0 * i - 100.0, 0.5 + 0.25 * i, 0.0,
               40.0 - 5.0 * i, 0.0, -(0.5 + 0.125 * i))
         p = os.path.join(d, f"r{i}.tif")
-        if not os.path.exists(p):
-            write_gtiff(np.full((h, w), i, np.uint8), p, geotransform=gt)
+        write_gtiff(np.full((h, w), i, np.uint8), p, geotransform=gt)
         paths.append(p)
     idx = tile_index(spark, paths)
     i_col = F.regexp_extract(F.col("location"), r"r(\d+)\.tif$", 1) \
@@ -5359,10 +5308,6 @@ def q_mvt_tile_roundtrip(spark, sf_dir):
     the XYZ tile and the quantized tile-local integer pixel coords
     closed-form. extent=256 keeps a quantization pixel ~2.4 km at z6, far
     above any numpy-vs-DuckDB transcendental ULP wobble."""
-    import os
-    import shutil
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -5379,10 +5324,7 @@ def q_mvt_tile_roundtrip(spark, sf_dir):
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 3 == 0)
     df = pts.select(F.col("doc_id").alias("fid"),
                     mk_geom("lon", "lat").alias("geom"))
-    out = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_mvt_{os.getpid()}_"
-                       f"{abs(hash(sf_dir)) % 10**8}")
-    shutil.rmtree(out, ignore_errors=True)
+    out = vsi.scratch()
     _mvt.write_mvt(df, out, zoom=_MVT_Z, layer="pages",
                    extent=_MVT_EXTENT).collect()
     _mvt.write_metadata(out, "pages", _MVT_Z)
@@ -5403,28 +5345,14 @@ def q_gpx_roundtrip(spark, sf_dir):
     doc_id <name>, written as per-partition GPX documents and read back
     through the waypoints layer of the distributed parser; the oracle
     recomputes the same (doc_id, lon, lat, ele) set from the table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.gpx import read_gpx, write_gpx
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 13 == 0)
 
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select(ptgeom("lon", "lat").alias("geom"),
+    layer = pts.select(st.st_makepoint("lon", "lat").alias("geom"),
                        F.col("doc_id").cast("string").alias("name"),
                        (F.col("doc_id").cast("double") / 10.0).alias("ele"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpx_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch()
     write_gpx(layer, path)
     out = read_gpx(spark, path).where(F.col("layer") == "waypoints")
 
@@ -5436,8 +5364,7 @@ def q_gpx_roundtrip(spark, sf_dir):
                       F.col("ele"))
 
 
-@_reg("aaigrid_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("aaigrid_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -5447,25 +5374,16 @@ def q_aaigrid_roundtrip(spark, sf_dir):
     fixed-width parallel pwrite sink (%.17g — bit-exact float64) and reads
     back through the byte-range line-planned parser; the oracle recomputes
     every cell value from the pages table."""
-    import os
-    import shutil
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.aaigrid import read_aaigrid, write_aaigrid
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_aai_{os.getpid()}.asc")
+    path = vsi.scratch(".asc")
     write_aaigrid(t, path, width_px=64, height_px=64, tile=8)
     back = read_aaigrid(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
-@_reg("xyz_raster_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("xyz_raster_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(63 - y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -5475,26 +5393,16 @@ def q_xyz_raster_roundtrip(spark, sf_dir):
     inference (spacing from the head block, extent from one min/max agg).
     gdal2xyz's y is the row index, and read_xyz re-anchors the top at max
     y, so the raster comes back flipped — the oracle flips y in SQL."""
-    import os
-    import shutil
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.xyzraster import read_xyz, write_xyz
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_xyzr_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch()
     write_xyz(t, path, tile=8)
     back, grid = read_xyz(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
-@_reg("png_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("png_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v
 FROM vals
@@ -5506,20 +5414,13 @@ def q_png_roundtrip(spark, sf_dir):
     driver) and re-reads through the filter-reconstructing decoder; the
     oracle recomputes every cell, clamped on the Byte cast exactly like
     GDALCopyWords."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.png import read_png, write_png
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_png_{os.getpid()}.png")
+    path = vsi.scratch(".png")
     write_png(t, path, width_px=64, height_px=64, tile=8)
     back = read_png(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
 @_reg("gdallocationinfo_vals", f"""
@@ -5671,27 +5572,13 @@ def q_dxf_roundtrip(spark, sf_dir):
     every 19th page becomes a POINT entity on a layer named by its doc_id,
     written as per-partition minimal DXF documents and read back through
     the group-code parser; the oracle recomputes the same point set."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.dxf import read_dxf, write_dxf
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
 
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select(ptgeom("lon", "lat").alias("geom"),
+    layer = pts.select(st.st_makepoint("lon", "lat").alias("geom"),
                        F.col("doc_id").cast("string").alias("layer"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_dxf_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch()
     write_dxf(layer, path)
     out = read_dxf(spark, path)
 
@@ -5759,8 +5646,7 @@ def q_pq_codes(spark, sf_dir):
     return pq_encode(emb, cbs)
 
 
-@_reg("envi_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("envi_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -5771,20 +5657,13 @@ def q_envi_roundtrip(spark, sf_dir):
     byte-range tasks (no per-scanline loop, unlike RawRasterBand); the
     oracle recomputes every cell from the pages table. float64 binary is
     bit-exact by construction."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.rawraster import read_envi, write_envi
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_envi_{os.getpid()}.dat")
+    path = vsi.scratch(".dat")
     write_envi(t, path, samples=64, lines=64, dtype="f8", tile=8)
     back, _ = read_envi(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
 @_reg("c4_filters", """
@@ -5945,21 +5824,13 @@ def q_spatialite_roundtrip(spark, sf_dir):
     + SRID + exact MBR + class body) and reads back through the
     rowid-range distributed reader; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import tempfile
-    import numpy as np
     from .core import wkb as _wkb
     from .sources.spatialite import read_spatialite, write_spatialite
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 11 == 0) \
         .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_slite_{os.getpid()}.sqlite")
-    if os.path.exists(path):
-        os.unlink(path)
-    rows = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                   [np.array([[r.lon, r.lat]])])),
-             {"doc_id": int(r.doc_id)}) for r in pts]
+    path = vsi.scratch(".sqlite")
+    rows = [(_wkb.point(r.lon, r.lat), {"doc_id": int(r.doc_id)}) for r in pts]
     write_spatialite(rows, path, table="pages", geometry_type="POINT")
     out = read_spatialite(spark, path, rows_per_task=64)
 
@@ -5980,19 +5851,13 @@ def q_mif_roundtrip(spark, sf_dir):
     mitab_miffile.cpp): every 17th page writes to a .mif/.mid pair and
     reads back through the keyword-scan byte-range distributed parser;
     the oracle recomputes the same (doc_id, lon, lat) set."""
-    import os
-    import tempfile
-    import numpy as np
     from .core import wkb as _wkb
     from .sources.mif import read_mif, write_mif
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 17 == 0) \
         .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_mif_{os.getpid()}.mif")
-    rows = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                   [np.array([[r.lon, r.lat]])])),
-             {"doc_id": int(r.doc_id)}) for r in pts]
+    path = vsi.scratch(".mif")
+    rows = [(_wkb.point(r.lon, r.lat), {"doc_id": int(r.doc_id)}) for r in pts]
     write_mif(rows, path)
     out = read_mif(spark, path, features_per_task=16)
 
@@ -6036,10 +5901,6 @@ def q_pmtiles_roundtrip(spark, sf_dir):
     the directory-planned byte-range decoder. The oracle recomputes the
     Hilbert tile assignment implicitly (x, y survive the id round trip)
     and the dequantized mercator coordinates closed-form."""
-    import os
-    import shutil
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -6057,16 +5918,11 @@ def q_pmtiles_roundtrip(spark, sf_dir):
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 5 == 0)
     df = pts.select(F.col("doc_id").alias("fid"),
                     mk_geom("lon", "lat").alias("geom"))
-    out = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_pmt_{os.getpid()}_"
-                       f"{abs(hash(sf_dir)) % 10**8}")
-    shutil.rmtree(out, ignore_errors=True)
+    out = vsi.scratch()
     _mvt.write_mvt(df, out, zoom=_MVT_Z, layer="pages",
                    extent=_MVT_EXTENT).collect()
     _mvt.write_metadata(out, "pages", _MVT_Z)
     arch = out + ".pmtiles"
-    if os.path.exists(arch):
-        os.unlink(arch)
     mvt_dir_to_pmtiles(spark, out, arch)
     back, _hdr = read_pmtiles(spark, arch)
 
@@ -6077,8 +5933,7 @@ def q_pmtiles_roundtrip(spark, sf_dir):
                        F.round(gy("geom"), 6).alias("my_r"))
 
 
-@_reg("bmp_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("bmp_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 256 AS DOUBLE) AS v
 FROM vals
@@ -6088,20 +5943,13 @@ def q_bmp_roundtrip(spark, sf_dir):
     writes as an 8-bit paletted bottom-up DIB through the per-strip
     pwrite sink and reads back through closed-form row-offset tasks; the
     oracle recomputes every cell (mod 256 — the 8-bit container)."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.bmp import read_bmp, write_bmp
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_bmp_{os.getpid()}.bmp")
+    path = vsi.scratch(".bmp")
     write_bmp(t, path, width=64, height=64, tile=8)
     back, _ = read_bmp(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 @_reg("jsonfg_roundtrip", f"""
@@ -6119,9 +5967,6 @@ def q_jsonfg_roundtrip(spark, sf_dir):
     non-WGS84 place (coordRefSys) and a time interval, reads back
     through the distributed per-line parser; the oracle recomputes
     coordinates and both interval endpoints."""
-    import os
-    import shutil
-    import tempfile
     import numpy as np
     import pandas as pd
     from .core import wkb as _wkb
@@ -6143,9 +5988,7 @@ def q_jsonfg_roundtrip(spark, sf_dir):
                                  (F.col("doc_id") % 28 + 3).cast("int")),
                       "yyyy-MM-dd").alias("t1"),
         F.to_json(F.struct(F.col("doc_id"))).alias("props"))
-    out = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_jsonfg_{os.getpid()}")
-    shutil.rmtree(out, ignore_errors=True)
+    out = vsi.scratch()
     write_jsonfg(df, out, crs="[EPSG:4326]", time_cols=("t0", "t1"))
     back = read_jsonfg(spark, out + "/part-*")
 
@@ -6173,8 +6016,6 @@ def q_ogrmerge_tindex(spark, sf_dir):
     and ogrtindex computes each dataset's extent by distributed envelope
     aggregation. The oracle recomputes both per split."""
     import os
-    import shutil
-    import tempfile
     import numpy as np
     import pandas as pd
     from .core import wkb as _wkb
@@ -6188,9 +6029,7 @@ def q_ogrmerge_tindex(spark, sf_dir):
         return pd.Series(_wkb.encode_points_batch(
             np.stack([lon.to_numpy(), lat.to_numpy()], axis=1)))
 
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_omrg_{os.getpid()}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = vsi.scratch()
     os.makedirs(base)
     paths = []
     for s in range(3):
@@ -6241,8 +6080,7 @@ def q_fix_mojibake(spark, sf_dir):
     return textops.fix_mojibake(corrupted)
 
 
-@_reg("dted_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("dted_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -6253,33 +6091,13 @@ def q_dted_roundtrip(spark, sf_dir):
     sample encoding, writes as column records (per-column parallel
     pwrite) and reads back through column-range byte tasks; the oracle
     recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.dted import read_dted, write_dted
-    import numpy as np
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_dted_{os.getpid()}.dt1")
+    t8 = _map_px(_density_tiles_full(spark, sf_dir), lambda a: a - 8.0)
+    path = vsi.scratch(".dt1")
     write_dted(t8, path, ncols=64, nrows=64, tile=8)
     back, _ = read_dted(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 @_reg("hash_sample", """
@@ -6358,22 +6176,15 @@ def q_gmt_georss_roundtrip(spark, sf_dir):
     single-file sinks and reads back through both wholetext-distributed
     parsers; the two readers' coordinates must agree with each other AND
     with the oracle (GeoRSS goes through the lat-first order swap)."""
-    import json
-    import os
-    import tempfile
-    import numpy as np
     from .core import wkb as _wkb
     from .sources.georss import read_georss, write_georss
     from .sources.gmt import read_gmt, write_gmt
 
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 23 == 0) \
         .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    gmt_p = os.path.join(tempfile.gettempdir(),
-                         f"gdal_spark_gmt_{os.getpid()}.gmt")
-    rss_p = os.path.join(tempfile.gettempdir(),
-                         f"gdal_spark_rss_{os.getpid()}.rss")
-    rows_g = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                     [np.array([[r.lon, r.lat]])])),
+    gmt_p = vsi.scratch(".gmt")
+    rss_p = vsi.scratch(".rss")
+    rows_g = [(_wkb.point(r.lon, r.lat),
                {"doc_id": int(r.doc_id)}) for r in pts]
     rows_r = [(g, {"title": f"d{a['doc_id']}"}) for g, a in rows_g]
     write_gmt(rows_g, gmt_p, gtype="POINT")
@@ -6419,8 +6230,6 @@ def q_osm_ways_assembly(spark, sf_dir):
     reference's on-disk node cache re-expressed relationally. The oracle
     recomputes each way's vertex count and planar length with window
     functions."""
-    import os
-    import tempfile
     import numpy as np
     import pandas as pd
     from .core import wkb as _wkb
@@ -6434,8 +6243,7 @@ def q_osm_ways_assembly(spark, sf_dir):
     for g in range(8):
         refs = [int(r.doc_id) + 1 for r in pts if r.doc_id % 8 == g]
         ways.append((g, refs, {"ref": str(g)}))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_osm_{os.getpid()}.osm")
+    path = vsi.scratch(".osm")
     write_osm(nodes, ways, (), path)
     lines = osm_layers(spark, path)["lines"]
 
@@ -6474,16 +6282,11 @@ def q_snapshot_incremental(spark, sf_dir):
     metadata-atomic), and the incremental scan between A and B must
     return exactly the appended rows — flagged per doc against the full
     table. The oracle recomputes membership arithmetically."""
-    import os
-    import shutil
-    import tempfile
     from .plans.snapshot import SnapshotTable
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("n_chars"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_snap_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch()
     t = SnapshotTable(spark, path)
     va = t.commit_append(d.where(F.col("doc_id") % 2 == 0))
     vb = t.commit_append(d.where(F.col("doc_id") % 2 == 1))
@@ -6770,13 +6573,9 @@ def q_rpc_dem_points(spark, sf_dir):
     in the CRS like GCP control points; workers lru_cache the load).
     Bilinear interpolation of a plane is the plane, so the oracle
     replays the whole evaluation in closed form."""
-    import os
-    import tempfile
-
     from .raster.transforms import rpc_dem_crs
 
-    dem = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_rpcdem_{os.getpid()}.asc")
+    dem = vsi.scratch(".asc")
     w, h = 73, 35
     lines = [f"ncols {w}", f"nrows {h}", "xllcorner -182.5",
              "yllcorner -87.5", "cellsize 5", "NODATA_value -9999"]
@@ -7044,8 +6843,7 @@ def q_link_triangles(spark, sf_dir):
     return graphops.triangles(_t(spark, sf_dir, "documents"))
 
 
-@_reg("gpkg_tiles_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("gpkg_tiles_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 256 AS DOUBLE) AS v
 FROM vals
@@ -7056,26 +6854,16 @@ def q_gpkg_tiles_roundtrip(spark, sf_dir):
     executors into a gpkg tile table and reads back through rowid-range
     parallel scan + in-task PNG decode; the oracle recomputes every
     cell mod 256 (the u1 PNG container)."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.gpkg import read_gpkg_tiles, write_gpkg_tiles
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpkgt_{os.getpid()}.gpkg")
-    if os.path.exists(path):
-        os.unlink(path)
+    path = vsi.scratch(".gpkg")
     write_gpkg_tiles(t, path, tile=8, zoom=3)
     back, _ = read_gpkg_tiles(spark, path, tile=8, rows_per_task=16)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
-@_reg("mbtiles_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("mbtiles_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 256 AS DOUBLE) AS v
 FROM vals
@@ -7084,22 +6872,13 @@ def q_mbtiles_roundtrip(spark, sf_dir):
     """MBTiles round trip (frmts/mbtiles/mbtilesdataset.cpp): density
     raster -> PNG tiles with the TMS row flip -> parallel read back with
     the un-flip; the oracle recomputes every cell mod 256."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.gpkg import read_mbtiles, write_mbtiles
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_mbt_{os.getpid()}.mbtiles")
-    if os.path.exists(path):
-        os.unlink(path)
+    path = vsi.scratch(".mbtiles")
     write_mbtiles(t, path, tile=8, zoom=3)
     back, _ = read_mbtiles(spark, path, tile=8, rows_per_task=16)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 @_reg("robots_optout", f"""
@@ -7199,8 +6978,7 @@ def q_stratified_sample(spark, sf_dir):
     return out.select("doc_id", "source")
 
 
-@_reg("pnm_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("pnm_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -7209,24 +6987,16 @@ def q_pnm_roundtrip(spark, sf_dir):
     path: maxval 65535 stores BIG-endian u2 samples per the Netpbm
     rule; density counts fit u16 exactly, so the oracle recomputes
     every cell with no container truncation."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.pnm import read_pnm, write_pnm
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pnm_{os.getpid()}.pgm")
+    path = vsi.scratch(".pgm")
     write_pnm(t, path, width=64, height=64, maxval=65535, tile=8)
     back, _ = read_pnm(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
-@_reg("netcdf_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("netcdf_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -7238,26 +7008,17 @@ def q_netcdf_roundtrip(spark, sf_dir):
     byte-range distributed parser; the oracle recomputes every cell.
     Dimension names and attributes are pinned by tests/test_netcdf.py
     against the autotest bug636.nc checksum (31621)."""
-    import os
-    import tempfile
-
-    from .raster.tiles import gdal2xyz
     from .sources.netcdf import read_netcdf, write_netcdf
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_nc_{os.getpid()}.nc")
+    path = vsi.scratch(".nc")
     write_netcdf(t, path, width=64, height=64, var="density", tile=8,
                  atts={"units": "pages"})
     back, _meta = read_netcdf(spark, path, var="density", tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
-@_reg("dem_formats_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("dem_formats_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        v AS v_hgt, v AS v_bt, v AS v_ers, v AS v_rst, v AS v_saga
 FROM vals
@@ -7273,15 +7034,12 @@ def q_dem_formats_roundtrip(spark, sf_dir):
     container holds them exactly and the oracle recomputes the same
     value five times."""
     import os
-    import tempfile
 
-    from .raster.tiles import gdal2xyz
     from .sources import demraw
 
     t = _density_tiles_full(spark, sf_dir)
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_demraw_{os.getpid()}")
-    os.makedirs(base, exist_ok=True)
+    base = vsi.scratch()
+    os.makedirs(base)
     hgt = os.path.join(base, "N00E000.hgt")
     demraw.write_srtmhgt(t, hgt, n=64, tile=8)
     bt = os.path.join(base, "d.bt")
@@ -7292,19 +7050,13 @@ def q_dem_formats_roundtrip(spark, sf_dir):
     demraw.write_idrisi(t, rst, samples=64, lines=64, dtype="i2", tile=8)
     sgrd = os.path.join(base, "d.sgrd")
     demraw.write_saga(t, sgrd, samples=64, lines=64, dtype="f4", tile=8)
-
-    def vals(df, name):
-        rows = gdal2xyz(df, tile=8)
-        return rows.select(F.col("x").cast("long").alias("x"),
-                           F.col("y").cast("long").alias("y"),
-                           F.col("value").cast("double").alias(name))
-    out = vals(demraw.read_srtmhgt(spark, hgt, tile=8)[0], "v_hgt")
+    out = _xyv(demraw.read_srtmhgt(spark, hgt, tile=8)[0], "v_hgt")
     for df, name in [(demraw.read_bt(spark, bt, tile=8)[0], "v_bt"),
                      (demraw.read_ers(spark, ers, tile=8)[0], "v_ers"),
                      (demraw.read_idrisi(spark, rst, tile=8)[0], "v_rst"),
                      (demraw.read_saga(spark, sgrd, tile=8)[0],
                       "v_saga")]:
-        out = out.join(vals(df, name), ["x", "y"])
+        out = out.join(_xyv(df, name), ["x", "y"])
     return out
 
 
@@ -7331,9 +7083,6 @@ def q_jpeg_roundtrip(spark, sf_dir):
     and the DuckDB oracle can recompute them relationally. The decode
     side is the same code path pinned bit-exact to libjpeg by the
     albania.jpg / JPEG-in-TIFF checksum tests."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -7372,8 +7121,7 @@ def q_jpeg_roundtrip(spark, sf_dir):
     tiles = tiles.unionByName(
         missing.groupBy("bx", "by").applyInPandas(build_empty,
                                                   TILE_SCHEMA))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_jpg_{os.getpid()}.jpg")
+    path = vsi.scratch(".jpg")
     save_raster(tiles, path, tile=8, quality=100)
     back, _meta = read_jpeg(spark, path, tile=8)
 
@@ -7768,10 +7516,6 @@ def q_osm_pbf_ways(spark, sf_dir):
     vectorized reduceat lane and reassembles ways via the distributed
     node join. Coordinates quantize to the 1e-7-degree granularity —
     the oracle applies the identical floor(x*1e7+0.5) quantization."""
-    import json as _json
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -7787,8 +7531,7 @@ def q_osm_pbf_ways(spark, sf_dir):
         refs = [int(r.doc_id) + 1 for r in pts
                 if (r.doc_id // 3) % 6 == g]
         ways.append((g, refs, {"ref": str(g)}))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pbf_{os.getpid()}.osm.pbf")
+    path = vsi.scratch(".osm.pbf")
     write_osm_pbf(nodes, ways, (), path, nodes_per_block=100)
     lines = osm_pbf_layers(spark, path)["lines"]
 
@@ -7997,22 +7740,17 @@ def q_gridshift_ntv2(spark, sf_dir):
     oracle replay the bilinear interpolation node-for-node in SQL. At
     cluster scale the .gsb ships with --files; here executors share the
     local path."""
-    import os
-    import tempfile
-
     import numpy as np
 
     from .raster import ntv2 as _ntv2
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_shift_{os.getpid()}.gsb")
-    if not os.path.exists(path):
-        i, j = np.mgrid[0:41, 0:41]
-        _ntv2.write_ntv2(path, lat0=40.0, lat1=60.0, lon0=-10.0,
-                         lon1=10.0, inc=0.5,
-                         lat_shift_sec=((i * 3 + j * 5) % 64) * 0.25,
-                         lon_shift_west_sec=((i * 7 + j * 11) % 64)
-                         * 0.25 - 4.0)
+    path = vsi.scratch(".gsb")
+    i, j = np.mgrid[0:41, 0:41]
+    _ntv2.write_ntv2(path, lat0=40.0, lat1=60.0, lon0=-10.0,
+                     lon1=10.0, inc=0.5,
+                     lat_shift_sec=((i * 3 + j * 5) % 64) * 0.25,
+                     lon_shift_west_sec=((i * 7 + j * 11) % 64)
+                     * 0.25 - 4.0)
     st.register_all(spark)
     p = datagen.points(spark, sf_dir).where(F.col("doc_id") % 11 == 3)
     p = p.select("doc_id",
@@ -8049,22 +7787,17 @@ def q_grib_ingest(spark, sf_dir):
     fixture encoder, decoded executor-side through the vectorized
     unpackbits lane, re-aggregated per band. The oracle recomputes the
     integer field sums from the closed-form formula."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from .raster.tiles import decode_px
     from .sources.grib import read_grib, write_grib
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_grib_{os.getpid()}.grib")
-    if not os.path.exists(path):
-        y, x = np.mgrid[0:37, 0:41]
-        arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
-                  for b in (1, 2, 3)]
-        write_grib(arrays, path, nbits=12, d_scale=2)
+    path = vsi.scratch(".grib")
+    y, x = np.mgrid[0:37, 0:41]
+    arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
+              for b in (1, 2, 3)]
+    write_grib(arrays, path, nbits=12, d_scale=2)
     tiles, _metas = read_grib(spark, path, tile=64)
 
     def agg(batches):
@@ -8534,15 +8267,11 @@ def q_s57_roundtrip(spark, sf_dir):
     reads back through the byte-range distributed record parser; the
     oracle recomputes the same 1e-7-quantized coordinates from the
     source table."""
-    import os
-    import tempfile
-
     from .sources.s57 import RCNM_VI, read_s57, write_s57
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 13 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_s57_{os.getpid()}.000")
+    path = vsi.scratch(".000")
     q = 10000000.0
 
     def qz(v):
@@ -8576,15 +8305,12 @@ def q_dgn_roundtrip(spark, sf_dir):
     distributed element parser; the oracle recomputes the quantized
     coordinates, and the text payload carries the doc_id for the join."""
     import math
-    import os
-    import tempfile
 
     from .sources.dgn import read_dgn, write_dgn
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 17 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_dgn_{os.getpid()}.dgn")
+    path = vsi.scratch(".dgn")
     q = 1000000.0
 
     def qz(v):
@@ -8776,17 +8502,11 @@ def q_snapshot_merge_delete(spark, sf_dir):
     oracle recomputes the surviving set relationally (FULL OUTER JOIN +
     filter); correctness covers update, insert, delete, and the carry of
     untouched files in one pass."""
-    import os
-    import shutil
-    import tempfile
-
     from .plans.snapshot import SnapshotTable
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("n_chars"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_snapmd_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch()
     t = SnapshotTable(spark, path)
     t.commit_append(d.where(F.col("doc_id") % 3 != 0).repartition(8))
     t.merge(d.where(F.col("doc_id") % 5 == 0)
@@ -8809,16 +8529,12 @@ def q_topojson_roundtrip(spark, sf_dir):
     running sum): every 19th page writes as a quantized Point into a
     Topology and reads back through the broadcast-arc executor decode;
     the oracle recomputes the 1e-7 grid snap."""
-    import os
-    import tempfile
-
     from .core import wkb as _wkb
     from .sources.topojson import read_topojson, write_topojson
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_tj_{os.getpid()}.topojson")
+    path = vsi.scratch(".topojson")
     import numpy as np
     feats = [(int(r.doc_id), {},
               _wkb.Geom(_wkb.POINT, [np.array([[r.lon, r.lat]])]))
@@ -8944,14 +8660,10 @@ def q_cog_overviews(spark, sf_dir):
     smallest-overview-first), then the level-1 overview reads back
     through the next-IFD chain and every pixel must equal the
     SQL-recomputed 2x2 average of the full-res grid."""
-    import os
-    import tempfile
-
     from .sources.geotiff import read_gtiff, write_cog
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_cog_{os.getpid()}.tif")
+    path = vsi.scratch(".tif")
     write_cog(t, path, 64, 64, tile=8, dtype="float64",
               geotransform=(-180.0, 5.625, 0.0, 90.0, 0.0, -2.8125))
     return _px_rows(read_gtiff(spark, path, tile=8, ifd=1), tile=8)
@@ -9005,14 +8717,10 @@ def q_warc_roundtrip(spark, sf_dir):
     write as WARC response records via the two-pass prefix-sum executor
     sink, the driver re-indexes headers only, and executors read the
     payload ranges back; url, date and payload bytes must survive."""
-    import os
-    import tempfile
-
     from .sources.warc import read_warc, write_warc
 
     pg = datagen.pages(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_warc_{os.getpid()}.warc")
+    path = vsi.scratch(".warc")
     write_warc(pg, path)
     w = read_warc(spark, path)
     return w.select("url", "warc_date",
@@ -9063,14 +8771,10 @@ def q_warc_gz_roundtrip(spark, sf_dir):
     columnar CDX index: pages compress-and-pwrite from executors (with
     the zlib-skew layout guard), then read back by byte range through
     the returned index DataFrame; url/date/payload must survive."""
-    import os
-    import tempfile
-
     from .sources.warc import read_warc_gz, write_warc_gz
 
     pg = datagen.pages(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_warcgz_{os.getpid()}.warc.gz")
+    path = vsi.scratch(".warc.gz")
     idx = write_warc_gz(pg, path)
     w = read_warc_gz(spark, path, idx)
     return w.select("url", "warc_date",
@@ -9375,19 +9079,14 @@ def q_spreadsheet_roundtrip(spark, sf_dir):
     cells; content.xml value-types) and read back through both
     binaryFile-distributed parsers; values from BOTH formats must match
     the parquet-derived oracle — typed cells survive the trip exactly."""
-    import os
-    import tempfile
-
     from .sources.xlsx import read_ods, read_xlsx, write_ods, write_xlsx
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 37 == 0) \
         .select("doc_id", "lang", "n_chars").orderBy("doc_id")
     rows = [{"doc_id": int(r.doc_id), "lang": r.lang,
              "n_chars": int(r.n_chars)} for r in d.collect()]
-    xp = os.path.join(tempfile.gettempdir(),
-                      f"gdal_spark_ss_{os.getpid()}.xlsx")
-    op = os.path.join(tempfile.gettempdir(),
-                      f"gdal_spark_ss_{os.getpid()}.ods")
+    xp = vsi.scratch(".xlsx")
+    op = vsi.scratch(".ods")
     write_xlsx(rows, xp)
     write_ods(rows, op)
     gx = read_xlsx(spark, xp).select(
@@ -9403,8 +9102,7 @@ def q_spreadsheet_roundtrip(spark, sf_dir):
     return gx.join(go, "doc_id")
 
 
-@_reg("gif_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("gif_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v
 FROM vals
@@ -9417,24 +9115,16 @@ def q_gif_roundtrip(spark, sf_dir):
     offsets) and re-reads through the giflib-semantics variable-width
     decoder (pinned to the reference autotest checksums 57921/4672 in
     tests); the oracle recomputes every cell with the Byte clamp."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.gif import read_gif, write_gif
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gif_{os.getpid()}.gif")
+    path = vsi.scratch(".gif")
     write_gif(t, path, width=64, height=64, tile=8)
     back, _ = read_gif(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
-@_reg("tileservice_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("tileservice_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v_tms,
        CAST(least(v, 255) AS DOUBLE) AS v_wmts
@@ -9451,14 +9141,10 @@ def q_tileservice_roundtrip(spark, sf_dir):
     driver enumeration); fetch+decode fan out through the core.vsi
     seam.  Both reads must agree with the clamped oracle cell-for-cell
     (PNG is lossless; the Byte clamp matches the GIF sink's)."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.tileservice import read_tileservice, read_wmts
 
     t = _density_tiles_full(spark, sf_dir)
-    d = os.path.join(tempfile.gettempdir(),
-                     f"gdal_spark_tiles_{os.getpid()}")
+    d = vsi.scratch()
     from .sources.tileservice import write_xyz_pyramid
     write_xyz_pyramid(t, d, tile=8)
     tms_xml = f"""<GDAL_WMS>
@@ -9502,15 +9188,7 @@ def q_tileservice_roundtrip(spark, sf_dir):
 </Capabilities>"""
     tms_df, _ = read_tileservice(spark, tms_xml, level=0)
     wmts_df, _ = read_wmts(spark, caps_xml, bands=1)
-    a = gdal2xyz(tms_df, tile=8).select(
-        F.col("x").cast("long").alias("x"),
-        F.col("y").cast("long").alias("y"),
-        F.col("value").alias("v_tms"))
-    b = gdal2xyz(wmts_df, tile=8).select(
-        F.col("x").cast("long").alias("x"),
-        F.col("y").cast("long").alias("y"),
-        F.col("value").alias("v_wmts"))
-    return a.join(b, ["x", "y"])
+    return _xyv(tms_df, "v_tms").join(_xyv(wmts_df, "v_wmts"), ["x", "y"])
 
 
 @_reg("pgdump_sink", f"""
@@ -9527,9 +9205,6 @@ def q_pgdump_sink(spark, sf_dir):
     file as text, strips the SRID flag/bytes back off the EWKB in pure
     column ops, and decodes coordinates through the vectorized WKB lane
     — values must match the parquet-derived oracle."""
-    import os
-    import tempfile
-
     import numpy as np
     from .core import wkb as _wkb
     from .sources.pgdump import write_pgdump
@@ -9544,8 +9219,7 @@ def q_pgdump_sink(spark, sf_dir):
         pts = np.stack([lon.to_numpy(), lat.to_numpy()], axis=1)
         return pd.Series(_wkb.encode_points_batch(pts))
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pgdump_{os.getpid()}.sql")
+    path = vsi.scratch(".sql")
     write_pgdump(
         lay.select(enc("lon", "lat").alias("geom"), "doc_id", "lang"),
         path, table="pages", srid=4326, geom_type="POINT")
@@ -9724,8 +9398,7 @@ def q_pmi_pairs(spark, sf_dir):
     return textops.pmi_cooccurrence(_t(spark, sf_dir, "documents"))
 
 
-@_reg("pds_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("pds_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(v AS DOUBLE) AS v
 FROM vals
@@ -9737,24 +9410,16 @@ def q_pds_roundtrip(spark, sf_dir):
     (pointer resolution + SAMPLE_TYPE dtype mapping, reader pinned to
     the reference autotest LDEM_4 checksum in tests); the oracle
     recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.pds import read_pds, write_pds
 
     t = _density_tiles_full(spark, sf_dir)
-    stem = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pds_{os.getpid()}")
+    stem = vsi.scratch()
     write_pds(t, stem + ".LBL", samples=64, lines=64, dtype="i2", tile=8)
     back, meta = read_pds(spark, stem + ".LBL", tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
-@_reg("vicar_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("vicar_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(v AS DOUBLE) AS v
 FROM vals
@@ -9766,24 +9431,16 @@ def q_vicar_roundtrip(spark, sf_dir):
     label-driven reader (pinned to the full reference autotest checksum
     table incl. VAX floats + BIP sample-records in tests); oracle
     recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.vicar import read_vicar, write_vicar
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_vic_{os.getpid()}.vic")
+    path = vsi.scratch(".vic")
     write_vicar(t, path, samples=64, lines=64, dtype="i2", tile=8)
     back, _ = read_vicar(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
-@_reg("isis3_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("isis3_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(v AS DOUBLE) AS v
 FROM vals
@@ -9795,24 +9452,16 @@ def q_isis3_roundtrip(spark, sf_dir):
     closed-form offset (zero re-striping) — and re-reads through the
     PVL reader (pinned to autotest checksums 42403/9978 in tests);
     oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.isis3 import read_isis3, write_isis3
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_isis_{os.getpid()}.cub")
+    path = vsi.scratch(".cub")
     write_isis3(t, path, samples=64, lines=64, dtype="i2", tile=8)
     back, _ = read_isis3(spark, path)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
-@_reg("nitf_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("nitf_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v
 FROM vals
@@ -9824,33 +9473,16 @@ def q_nitf_roundtrip(spark, sf_dir):
     re-reads through the fixed-width header walk (reader pinned to the
     autotest rgb.ntf checksum 21349 in tests); Byte clamp like
     GDALCopyWords; oracle recomputes every cell."""
-    import os
-    import tempfile
     import numpy as np
-    import pandas as pd
-    from .raster.tiles import TILE_SCHEMA, decode_px, encode_px, gdal2xyz
     from .sources.nitf import read_nitf, write_nitf
 
-    t0 = _density_tiles_full(spark, sf_dir)
     # clamp f8 -> u1 before the sink (GDALCopyWords semantics)
-    def clamp(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.clip(decode_px(r.px, r.dtype, 8), 0, 255)
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y, "u1",
-                            r.nodata, encode_px(arr.astype("u1"))))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             TILE_SCHEMA.fields])
-    t = t0.mapInPandas(clamp, TILE_SCHEMA)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_nitf_{os.getpid()}.ntf")
+    t = _map_px(_density_tiles_full(spark, sf_dir),
+                lambda a: np.clip(a, 0, 255).astype("u1"))
+    path = vsi.scratch(".ntf")
     write_nitf(t, path, width=64, height=64, tile=8, dtype="u1")
     back, _ = read_nitf(spark, path)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _xyv(back)
 
 
 @_reg("corpus_report", """
@@ -10261,8 +9893,7 @@ def q_st_transform_worldmap2(spark, sf_dir):
         FROM t_wm2_pts""")
 
 
-@_reg("usgsdem_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("usgsdem_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -10276,34 +9907,15 @@ def q_usgsdem_roundtrip(spark, sf_dir):
     semantics; the oracle recomputes every cell. The same reader passes
     the reference autotest golden checksums (tests/test_usgsdem.py:
     1583 / 53864 / 61424)."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.usgsdem import read_usgsdem, write_usgsdem
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_usgsdem_{os.getpid()}.dem")
+    t8 = _map_px(_density_tiles_full(spark, sf_dir), lambda a: a - 8.0)
+    path = vsi.scratch(".dem")
     write_usgsdem(t8, path, width_px=64, height_px=64, tile=8,
                   x0=-180.0, y_top=90.0, dx=5.625, dy=2.8125,
                   geographic=True)
     back = read_usgsdem(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 @_reg("grib2_ingest", """
@@ -10329,22 +9941,17 @@ def q_grib2_ingest(spark, sf_dir):
     spatial differencing, tests/test_grib2.py), masked cells read as
     the reference's 9999 nodata and are excluded from the aggregate.
     The oracle recomputes the masked integer sums closed-form."""
-    import os
-    import tempfile
-
     import numpy as np
 
     from .raster.tiles import decode_px
     from .sources.grib2 import read_grib2, write_grib2
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_grib2_{os.getpid()}.grb2")
-    if not os.path.exists(path):
-        y, x = np.mgrid[0:37, 0:41]
-        arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
-                  for b in (1, 2, 3)]
-        bm = (x + y) % 5 != 0
-        write_grib2(arrays, path, bitmaps=[None, None, bm])
+    path = vsi.scratch(".grb2")
+    y, x = np.mgrid[0:37, 0:41]
+    arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
+              for b in (1, 2, 3)]
+    bm = (x + y) % 5 != 0
+    write_grib2(arrays, path, bitmaps=[None, None, bm])
     tiles, metas = read_grib2(spark, path, tile=64)
 
     import pandas as pd
@@ -10370,8 +9977,7 @@ def q_grib2_ingest(spark, sf_dir):
                     "ni", "nj", "n_valid", "sum_cs"))
 
 
-@_reg("hfa_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("hfa_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -10385,34 +9991,15 @@ def q_hfa_roundtrip(spark, sf_dir):
     (incl. ESRI GRID RLE and spill .ige files) matches the reference
     autotest golden checksums 6691 / 23529 / 1631
     (tests/test_hfa.py). The oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.hfa import read_hfa, write_hfa
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_hfa_{os.getpid()}.img")
+    t8 = _map_px(_density_tiles_full(spark, sf_dir), lambda a: a - 8.0)
+    path = vsi.scratch(".img")
     write_hfa(t8, path, width_px=64, height_px=64, tile=8,
               pixel_type=8,
               gt=(-180.0, 5.625, 0.0, 90.0, 0.0, -2.8125))
     back, _ = read_hfa(spark, path)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 def _nzmg_sql():
@@ -10711,8 +10298,7 @@ def q_rrf_fusion(spark, sf_dir):
     return simsearch.rrf_fusion([bm, co], k=60, topk=15)
 
 
-@_reg("lan_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("lan_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -10724,36 +10310,16 @@ def q_lan_roundtrip(spark, sf_dir):
     reads back through line-strip byte tasks; the same reader passes
     both reference autotest fixtures at their golden checksum
     (tests/test_lan.py). The oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.lan import read_lan, write_lan
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_lan_{os.getpid()}.lan")
+    t8 = _map_px(_density_tiles_full(spark, sf_dir), lambda a: a - 8.0)
+    path = vsi.scratch(".lan")
     write_lan(t8, path, width_px=64, height_px=64, tile=8, pix=2)
     back, _ = read_lan(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
-@_reg("pcraster_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("pcraster_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -10765,22 +10331,14 @@ def q_pcraster_roundtrip(spark, sf_dir):
     same reader passes the reference autotest ldd.map golden checksum
     4528 + geotransform + nodata pins (tests/test_pcraster.py). Counts
     are exact in REAL4, so the oracle recomputes every cell verbatim."""
-    import os
-    import tempfile
-
-    from .raster.tiles import gdal2xyz
     from .sources.pcraster import read_pcraster, write_pcraster
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pcr_{os.getpid()}.map")
+    path = vsi.scratch(".map")
     write_pcraster(t, path, width_px=64, height_px=64, tile=8,
                    cell_repr="f4")
     back, _ = read_pcraster(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 def _zonal_oracle_sql():
@@ -10807,8 +10365,7 @@ def _zonal_oracle_sql():
     return " UNION ALL ".join(parts)
 
 
-@_reg("zonal_stats", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + f""",
+@_reg("zonal_stats", _DENSITY_XY_SQL + f""",
 centers AS (SELECT v,
                    -180.0 + (x + 0.5) * 5.625 AS cx,
                    -90.0 + (y + 0.5) * 2.8125 AS cy
@@ -10876,8 +10433,7 @@ def q_st_hausdorff(spark, sf_dir):
         FROM t_hd_pts""")
 
 
-@_reg("bsb_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("bsb_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 120 AS DOUBLE) AS v
 FROM vals
@@ -10892,32 +10448,13 @@ def q_bsb_roundtrip(spark, sf_dir):
     repair) — the same reader passes the autotest golden checksum
     30321 on all three rgbsmall variants (tests/test_bsb.py). The
     oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.bsb import read_bsb, write_bsb
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def mod(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) % 120.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(mod, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_bsb_{os.getpid()}.kap")
+    t8 = _map_px(_density_tiles_full(spark, sf_dir), lambda a: a % 120.0)
+    path = vsi.scratch(".kap")
     write_bsb(t8, path, width_px=64, height_px=64, tile=8, depth=7)
     back, _ = read_bsb(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 def _platt_oracle_sql(iters: int = 6) -> str:
@@ -11030,8 +10567,7 @@ def q_readability(spark, sf_dir):
     return textops.readability(d)
 
 
-@_reg("hdf5_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("hdf5_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -11047,26 +10583,12 @@ def q_hdf5_roundtrip(spark, sf_dir):
     reference autotest golden checksums (tests/test_hdf5.py: 135, 18,
     231, 523, 511 — and byte.tif's 4672 through a flipped netCDF-4
     Band1). The oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
+    from .raster.tiles import decode_px
     from .sources.hdf5 import read_hdf5, write_hdf5
     import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_h5_{os.getpid()}.h5")
+    t8 = _map_px(_density_tiles_full(spark, sf_dir), lambda a: a - 8.0)
+    path = vsi.scratch(".h5")
     write_hdf5(t8, path, width_px=64, height_px=64, tile=8)
     back, _ = read_hdf5(spark, path, "/Band1", tile=256)
 
@@ -11084,14 +10606,10 @@ def q_hdf5_roundtrip(spark, sf_dir):
             yield pd.DataFrame(out, columns=list(pdf.columns))
 
     small = back.mapInPandas(retile, back.schema)
-    rows = gdal2xyz(small, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(small)
 
 
-@_reg("sdts_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("sdts_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -11106,32 +10624,13 @@ def q_sdts_roundtrip(spark, sf_dir):
     golden checksum 61672 + exact geotransform + TITLE on the
     truncated ALANSON quad (tests/test_sdts.py). The oracle recomputes
     every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.sdts import read_sdts, write_sdts
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    d = os.path.join(tempfile.gettempdir(),
-                     f"gdal_spark_sdts_{os.getpid()}")
+    t8 = _map_px(_density_tiles_full(spark, sf_dir), lambda a: a - 8.0)
+    d = vsi.scratch()
     catd = write_sdts(t8, d, width_px=64, height_px=64, tile=8)
     back, _ = read_sdts(spark, catd, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _xyv(back)
 
 
 def _ari_sql():
@@ -11220,9 +10719,6 @@ def q_openfilegdb_roundtrip(spark, sf_dir):
     cannot move an 8-decimal rounding; the oracle replays the same
     1e-7 quantization from the source table."""
     import math
-    import os
-    import shutil
-    import tempfile
 
     import numpy as np
 
@@ -11232,9 +10728,7 @@ def q_openfilegdb_roundtrip(spark, sf_dir):
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_ofgdb_{os.getpid()}.gdb")
-    shutil.rmtree(path, ignore_errors=True)
+    path = vsi.scratch(".gdb")
     q = 10000000.0
 
     def qz(v):
@@ -11276,22 +10770,17 @@ def q_grib2_jpeg2000(spark, sf_dir):
     sums closed-form.  Closes the reference's frmts/openjpeg
     dependency for GRIB2 (grib2.py template-40, was 'unsupported' in
     rounds 1-4)."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from .raster.tiles import decode_px
     from .sources.grib2 import read_grib2, write_grib2
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_grib2j2k_{os.getpid()}.grb2")
-    if not os.path.exists(path):
-        y, x = np.mgrid[0:37, 0:41]
-        arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
-                  for b in (1, 2)]
-        write_grib2(arrays, path, drt=40)
+    path = vsi.scratch(".grb2")
+    y, x = np.mgrid[0:37, 0:41]
+    arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
+              for b in (1, 2)]
+    write_grib2(arrays, path, drt=40)
     tiles, metas = read_grib2(spark, path, tile=64)
 
     def agg(batches):
@@ -11645,25 +11134,20 @@ def q_multidim_slice(spark, sf_dir):
     cell against the closed-form oracle.  Chunked layouts pinned
     separately against the HDFEOS autotest fixture in
     tests/test_hdf5.py."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from .raster.tiles import decode_px
     from .sources.hdf5 import read_hdf5_multidim, write_hdf5_nd
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_md4_{os.getpid()}.h5")
-    if not os.path.exists(path):
-        t, z, h, w = 3, 2, 37, 41
-        tt, zz, yy, xx = np.meshgrid(
-            np.arange(t), np.arange(z), np.arange(h), np.arange(w),
-            indexing="ij")
-        arr = ((tt * 1000 + zz * 500 + yy * 41 + xx) % 997) \
-            .astype("<i4")
-        write_hdf5_nd(arr, path, "temp")
+    path = vsi.scratch(".h5")
+    t, z, h, w = 3, 2, 37, 41
+    tt, zz, yy, xx = np.meshgrid(
+        np.arange(t), np.arange(z), np.arange(h), np.arange(w),
+        indexing="ij")
+    arr = ((tt * 1000 + zz * 500 + yy * 41 + xx) % 997) \
+        .astype("<i4")
+    write_hdf5_nd(arr, path, "temp")
     tiles, hdf = read_hdf5_multidim(spark, path, tile=64)
 
     def agg(batches):

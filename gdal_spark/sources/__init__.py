@@ -20,12 +20,14 @@ def _vsizip(path: str) -> str:
     """/vsizip/ twin (port/cpl_vsil_gzip.cpp VSIZipFilesystemHandler):
     '/vsizip/archive.zip/member' or 'archive.zip!member' (or a bare .zip
     with one recognizable member) extracts the member — plus its sidecars
-    (.shx/.dbf for .shp) — to a deterministic temp dir and returns the
-    extracted path. Extraction is driver-side and cached by (zip mtime,
-    member); the distributed read then runs on the extracted file."""
+    (.shx/.dbf for .shp) — to a fresh directory under the process scratch
+    root (core.vsi.scratch, removed at exit) and returns the extracted
+    path. Extraction is driver-side; the distributed read then runs on
+    the extracted file."""
     import os
-    import tempfile
     import zipfile
+
+    from ..core import vsi
 
     if path.startswith("/vsizip/"):
         rest = path[len("/vsizip/"):]
@@ -49,10 +51,8 @@ def _vsizip(path: str) -> str:
                 (i for i, e in enumerate(pref)
                  if n.lower().endswith(e)), len(pref)))
         member = ranked[0]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"gdal_spark_vsizip_{abs(hash((os.path.abspath(zpath), int(os.path.getmtime(zpath)))))}")
-    os.makedirs(base, exist_ok=True)
+    base = vsi.scratch()
+    os.makedirs(base)
     want = {member}
     stem, ext = os.path.splitext(member)
     if ext.lower() == ".shp":
@@ -61,9 +61,8 @@ def _vsizip(path: str) -> str:
                                   stem.lower() + ".dbf")}
     for n in want:
         dst = os.path.join(base, os.path.basename(n))
-        if not os.path.exists(dst):
-            with zf.open(n) as src, open(dst, "wb") as out:
-                out.write(src.read())
+        with zf.open(n) as src, open(dst, "wb") as out:
+            out.write(src.read())
     return os.path.join(base, os.path.basename(member))
 
 

@@ -17,9 +17,7 @@ EBCOT stream is sequentially dependent by design).
 
 from __future__ import annotations
 
-import os
 import struct
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -126,15 +124,12 @@ def read_jp2(spark: SparkSession, path: str, tile: int = 256):
     if geo:
         try:
             from .geotiff import read_ifd
-            tmp = os.path.join(
-                tempfile.gettempdir(),
-                f"gdal_spark_geojp2_{os.getpid()}_{abs(hash(path))}.tif")
+            tmp = vsi.scratch(".tif")
             with open(tmp, "wb") as f:
                 f.write(geo)
             ifd = read_ifd(tmp)
             if ifd.get("geotransform"):
                 meta["gt"] = ifd["geotransform"]
-            os.unlink(tmp)
         except Exception:
             pass
     ntx = -(-(siz["xsiz"] - siz["xtosiz"]) // siz["xtsiz"])
@@ -274,13 +269,10 @@ def write_jp2(arr: np.ndarray, path: str, depth: int = 8,
     if gt is not None:
         # GeoJP2: a degenerate 1x1 GeoTIFF carrying only the geo tags
         from .geotiff import write_gtiff
-        tmp = os.path.join(
-            tempfile.gettempdir(),
-            f"gdal_spark_geojp2w_{os.getpid()}_{abs(hash(path))}.tif")
+        tmp = vsi.scratch(".tif")
         write_gtiff(np.zeros((1, 1), np.uint8), tmp, geotransform=gt)
         with open(tmp, "rb") as f:
             geo = f.read()
-        os.unlink(tmp)
         out += box(b"uuid", _GEOTIFF_UUID + geo)
     out += box(b"jp2c", cs)
     with open(path, "wb") as f:

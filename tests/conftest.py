@@ -14,4 +14,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def own_scratch(monkeypatch, tmp_path):
+    """tmp_path stands in for the system temp directory, and the next
+    core.vsi.scratch() call makes a fresh scratch root inside it."""
+    import tempfile
+
+    from gdal_spark.core import vsi
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(vsi, "_scratch_root", None)
+    return tmp_path
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

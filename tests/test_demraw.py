@@ -171,14 +171,12 @@ def test_lan_reference_golden_checksums(spark):
         assert gdal_checksum(full) == 10
 
 
-def test_lan_write_read_roundtrip(spark):
+def test_lan_write_read_roundtrip(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
     from gdal_spark.raster.tiles import TILE_SCHEMA, decode_px, encode_px
     from gdal_spark.sources.lan import parse_header, read_lan, write_lan
-    import tempfile
-    import os
     W = H = 70
     t = 32
     rng = np.random.RandomState(3)
@@ -193,8 +191,7 @@ def test_lan_write_read_roundtrip(spark):
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields]),
         TILE_SCHEMA)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"lan_rt_{os.getpid()}.lan")
+    path = str(tmp_path / "lan_rt.lan")
     write_lan(df, path, W, H, tile=t, pix=2,
               ulx=100.5, uly=-200.5, pw=30.0, ph=30.0)
     meta = parse_header(path)
@@ -206,4 +203,3 @@ def test_lan_write_read_roundtrip(spark):
         hh, ww = min(t, H - y0), min(t, W - x0)
         back[y0:y0 + hh, x0:x0 + ww] = arr[:hh, :ww]
     assert np.array_equal(back.astype(np.int16), full)
-    os.unlink(path)

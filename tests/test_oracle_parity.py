@@ -6,6 +6,7 @@ Spark AND its oracle_sql() on DuckDB at sf0.001, compare row sets exactly
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -84,3 +85,16 @@ def test_rows_only_queries(spark):
     for name in set(qs) - set(entry_mod.oracle_sql()):
         df = qs[name](spark, SF_DIR)
         assert df.count() >= 0, name
+
+
+def test_roundtrip_fixtures_stay_under_scratch_root(spark, own_scratch):
+    """Fixture-writing queries add nothing to the temp directory but the
+    per-process scratch root, and removing that root removes them all."""
+    from gdal_spark.core import vsi
+    for name in ("png_roundtrip", "kml_roundtrip"):
+        assert entry_mod.queries()[name](spark, SF_DIR).count() > 0
+    (root,) = os.listdir(own_scratch)
+    assert root.startswith("gdal_spark_")
+    assert os.listdir(own_scratch / root)
+    vsi.remove_scratch()
+    assert os.listdir(own_scratch) == []

@@ -112,3 +112,18 @@ def test_registered_backend_drives_format_reader(tmp_path):
 
     with pytest.raises(ValueError):
         vsi.pread("nosuchscheme://x", 0, 1)
+
+
+def test_scratch_fresh_paths_under_one_root(own_scratch):
+    a, b = vsi.scratch(), vsi.scratch(".tif")
+    root = os.path.dirname(a)
+    assert a != b and os.path.dirname(b) == root and b.endswith(".tif")
+    assert os.listdir(own_scratch) == [os.path.basename(root)]
+    assert os.path.basename(root).startswith("gdal_spark_")
+    assert os.listdir(root) == []              # nothing exists at a or b
+    with open(b, "wb") as f:
+        f.write(b"x")
+    vsi.remove_scratch()
+    assert not os.path.exists(root)
+    assert os.path.dirname(vsi.scratch()) != root  # a new root after cleanup
+    vsi.remove_scratch()
